@@ -55,12 +55,6 @@ DEFAULTS: dict[str, dict[str, Any]] = {
         # "hash" above auto_approx_size_bytes unless set explicitly —
         # same pattern as the distinct/percentile sketches.
         "duplicate_check_mode": "full",
-        # Retained for callers that set it; the profiler no longer
-        # persists its input — concurrent column-pruned re-scans
-        # measured faster than the materialization barrier at every
-        # size where the cache used to trigger, and above this
-        # threshold (the 100 TB path) it never triggered anyway.
-        "cache_row_threshold": 50_000_000,
     },
     "validation": {
         # reference: sparvi/config.py:58

@@ -252,9 +252,12 @@ def ngram_jaccard_pairs(
       ``lsh_candidate_pairs``) to verify instead of self-joining at
       all — the 100 TB path.
 
-    Note: the capped path is mildly eager — it materializes the (small)
+    Note: two paths are eager. The capped path materializes the (small)
     stop-shingle list and checks its emptiness so benign corpora pay
-    zero rescue overhead; the other paths stay fully lazy.
+    zero rescue overhead. The ``candidates`` path ``localCheckpoint()``s
+    the candidate frame when the verification plan is built, so the
+    whole candidate generation (LSH or prefix filter) runs before this
+    function returns. The uncapped self-join path stays fully lazy.
     """
     # materialize the distinct-shingle frame on first use (lazy local
     # checkpoint): sizes, doc frequencies, both self-join sides and
@@ -766,14 +769,15 @@ def dedup_clusters(
     # * convergence rides an observe() metric on the checkpoint job:
     #   labels only ever DECREASE (least of old and candidates), so an
     #   unchanged per-round label digest is pointwise convergence — no
-    #   second job. For INTEGRAL ids the digest is the exact
-    #   decimal(38,0) label sum (strictly decreasing while labels
-    #   change — deterministic; bigint ids cannot overflow it at any
-    #   corpus size). For every other id type (strings, floats) the
-    #   sum is not usable — casting a string to decimal throws under
-    #   ANSI mode (NULLs into false convergence otherwise), and a
-    #   float cast truncates two distinct labels onto one value — so
-    #   the digest is the exact-decimal sum of xxhash64(id, label):
+    #   second job. For INTEGRAL ids (integer types, scale-0
+    #   decimals) the digest is the exact decimal(38,0) label sum
+    #   (strictly decreasing while labels change — deterministic;
+    #   bigint ids cannot overflow it at any corpus size). For every
+    #   other id type (strings, floats, fractional decimals) the sum
+    #   is not usable — casting a string to decimal throws under ANSI
+    #   mode (NULLs into false convergence otherwise), and a float or
+    #   fractional-decimal cast rounds two distinct labels onto one
+    #   value — so the digest is the exact-decimal sum of xxhash64(id, label):
     #   an unchanged digest with ≥1 changed label needs hash deltas
     #   that cancel exactly (~2⁻⁶⁴/round — the collision class the
     #   star strategy's edge digest and the md5 banding already
@@ -787,10 +791,10 @@ def dedup_clusters(
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
+    id_type = edges.schema["a"].dataType
     integral_ids = isinstance(
-        edges.schema["a"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-    )
+        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
     _digest = (
         F.col("label") if integral_ids else F.xxhash64(F.col("id"), F.col("label"))
     )

@@ -109,6 +109,38 @@ def doc_features(
 _HASHED_KERNEL_MAX_D = 1 << 22
 
 
+def _dsir_weight_table(spark, counts_rows, alpha: float, const: float,
+                       num_buckets: int):
+    """Per-bucket DSIR weight ``(ln(n_target+α) − ln(n_raw+α)) + const``
+    as a float64 array, every log taken ON the JVM (py4j ``Math.log`` —
+    the same libm as the expression path). Counts are small integers
+    that repeat across buckets, so logs are memoized by input value:
+    one py4j round-trip per distinct count instead of two per bucket."""
+    import numpy as np
+
+    jlog = spark._jvm.java.lang.Math.log
+    log_cache: dict[float, float] = {}
+
+    def jvm_log(x: float) -> float:
+        v = log_cache.get(x)
+        if v is None:
+            v = float(jlog(x))
+            log_cache[x] = v
+        return v
+
+    a = float(alpha)
+    # unseen bucket: (ln(0+α) − ln(0+α)) + const — exactly const, the
+    # same cancellation the JVM expression performs
+    log_a = jvm_log(0.0 + a)
+    W = np.full(num_buckets, (log_a - log_a) + const, dtype=np.float64)
+    for r in counts_rows:  # bucket-bounded
+        W[int(r["feature"])] = (
+            jvm_log(float(r["n_target"] or 0) + a)
+            - jvm_log(float(r["n_raw"] or 0) + a)
+        ) + const
+    return W
+
+
 def _score_dsir_per_doc_arrow(
     docs: DataFrame,
     counts_ck: DataFrame,
@@ -134,18 +166,9 @@ def _score_dsir_per_doc_arrow(
     (id, text) crosses into Python; only docs-grain rows come back."""
     import numpy as np
 
-    spark = docs.sparkSession
-    jlog = spark._jvm.java.lang.Math.log
-    a = float(alpha)
-    # unseen bucket: (ln(0+α) − ln(0+α)) + const — exactly const, the
-    # same cancellation the JVM expression performs
-    log_a = float(jlog(0.0 + a))
-    W = np.full(num_buckets, (log_a - log_a) + const, dtype=np.float64)
-    for r in counts_ck.collect():  # bucket-bounded
-        W[int(r["feature"])] = (
-            float(jlog(float(r["n_target"] or 0) + a))
-            - float(jlog(float(r["n_raw"] or 0) + a))
-        ) + const
+    W = _dsir_weight_table(
+        docs.sparkSession, counts_ck.collect(), alpha, const, num_buckets
+    )
     D = np.int64(num_buckets)
     ks = tuple(range(1, ngram_n + 1))
     id_type = docs.schema[id_col].dataType.simpleString()

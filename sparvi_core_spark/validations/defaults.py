@@ -62,6 +62,121 @@ def _rule(name, description, query, operator="equals", expected_value=0):
     }
 
 
+# Query templates, one per rule family. The rule compiler
+# (``validations/compiler.py``) recognizes a default rule by matching its
+# ``query`` against these same functions, so the SQL text lives only
+# here. The first argument is always the table.
+
+
+def count_rows_sql(t: str) -> str:
+    """Families 1 (not empty) and 11 (reference-table size)."""
+    return f"SELECT COUNT(*) FROM {t}"
+
+
+def count_where_sql(t: str, predicate: str) -> str:
+    """Every count-of-offending-rows family; the predicate functions
+    below supply the ``WHERE`` clause."""
+    return f"SELECT COUNT(*) FROM {t} WHERE {predicate}"
+
+
+def is_null(c: str) -> str:
+    return f"{c} IS NULL"
+
+
+def is_negative(c: str) -> str:
+    return f"{c} < 0"
+
+
+def is_zero(c: str) -> str:
+    return f"{c} = 0"
+
+
+def is_future(c: str) -> str:
+    return f"{c} > CURRENT_DATE"
+
+
+def is_before_1970(c: str) -> str:
+    return f"{c} < '1970-01-01'"
+
+
+def is_before(c: str, other: str) -> str:
+    """Families 8 (end date before start) and 15 (updated before created)."""
+    return f"{c} IS NOT NULL AND {other} IS NOT NULL AND {c} < {other}"
+
+
+def is_longer_than(c: str, max_len: int) -> str:
+    return f"LENGTH({c}) > {max_len}"
+
+
+def is_empty_string(c: str) -> str:
+    return f"{c} = ''"
+
+
+def is_bad_email(c: str) -> str:
+    return f"{c} IS NOT NULL AND {c} NOT LIKE '%@%.%'"
+
+
+def is_bad_phone(c: str) -> str:
+    return f"{c} IS NOT NULL AND NOT ({c} RLIKE '{PHONE_REGEX}')"
+
+
+def is_bad_postal(c: str) -> str:
+    return f"{c} IS NOT NULL AND LENGTH(TRIM({c})) < 3"
+
+
+def pk_unique_sql(t: str, pk: str) -> str:
+    """``pk`` is the comma-joined key list (composite keys allowed)."""
+    return (f"SELECT COUNT(*) FROM (SELECT {pk}, COUNT(*) AS cnt FROM {t} "
+            f"GROUP BY {pk} HAVING COUNT(*) > 1) AS duplicates")
+
+
+def row_growth_sql(t: str) -> str:
+    return f"""WITH current_count AS (SELECT COUNT(*) AS cnt FROM {t}),
+prev_count AS (SELECT CASE WHEN COUNT(*) = 0 THEN NULL ELSE COUNT(*) END AS cnt FROM {t})
+SELECT CASE WHEN prev_count.cnt IS NULL THEN 0
+            WHEN ABS(current_count.cnt - prev_count.cnt) > prev_count.cnt * 0.2 THEN 1
+            ELSE 0 END
+FROM current_count, prev_count"""
+
+
+def unique_sql(t: str, c: str) -> str:
+    return (f"SELECT COUNT(*) FROM (SELECT {c}, COUNT(*) AS cnt FROM {t} "
+            f"WHERE {c} IS NOT NULL GROUP BY {c} "
+            f"HAVING COUNT(*) > 1) AS duplicates")
+
+
+def outliers_sql(t: str, c: str) -> str:
+    return f"""WITH stats AS (
+    SELECT AVG({c}) AS avg_val, STDDEV_SAMP({c}) AS stddev_val
+    FROM {t} WHERE {c} IS NOT NULL
+)
+SELECT COUNT(*) FROM {t}, stats
+WHERE {c} > stats.avg_val + 3 * stats.stddev_val
+   OR {c} < stats.avg_val - 3 * stats.stddev_val"""
+
+
+def null_rate_expr(c: str) -> str:
+    return f"(COUNT(*) FILTER (WHERE {c} IS NULL) * 100.0 / NULLIF(COUNT(*), 0))"
+
+
+def null_rate_sql(t: str, c: str) -> str:
+    return f"SELECT {null_rate_expr(c)} FROM {t}"
+
+
+def distribution_sql(t: str, c: str) -> str:
+    return f"""WITH val_counts AS (
+    SELECT {c}, COUNT(*) AS cnt,
+           (COUNT(*) * 100.0 / NULLIF((SELECT COUNT(*) FROM {t}), 0)) AS pct
+    FROM {t} WHERE {c} IS NOT NULL GROUP BY {c}
+)
+SELECT COUNT(*) FROM val_counts WHERE pct > 95.0"""
+
+
+def ref_distribution_sql(t: str, c: str) -> str:
+    return (f"SELECT CASE WHEN (SELECT COUNT(DISTINCT {c}) FROM {t} "
+            f"WHERE {c} IS NOT NULL) = 1 THEN 1 ELSE 0 END")
+
+
 def _matches(name: str, patterns: list[str]) -> bool:
     low = name.lower()
     return any(p in low for p in patterns)
@@ -120,7 +235,7 @@ def get_default_validations(
     rules.append(_rule(
         f"check_{t}_not_empty",
         f"Ensure {t} table has at least one row",
-        f"SELECT COUNT(*) FROM {t}",
+        count_rows_sql(t),
         "greater_than", 0,
     ))
 
@@ -130,8 +245,7 @@ def get_default_validations(
         rules.append(_rule(
             f"check_{t}_pk_unique",
             f"Ensure primary key ({pk}) has no duplicates",
-            f"SELECT COUNT(*) FROM (SELECT {pk}, COUNT(*) AS cnt FROM {t} "
-            f"GROUP BY {pk} HAVING COUNT(*) > 1) AS duplicates",
+            pk_unique_sql(t, pk),
         ))
 
     # 3. row growth placeholder (the reference's self-comparing CTE,
@@ -140,12 +254,7 @@ def get_default_validations(
     rules.append(_rule(
         f"check_{t}_row_growth",
         f"Detect unusual growth in {t} row count (>20% change)",
-        f"""WITH current_count AS (SELECT COUNT(*) AS cnt FROM {t}),
-prev_count AS (SELECT CASE WHEN COUNT(*) = 0 THEN NULL ELSE COUNT(*) END AS cnt FROM {t})
-SELECT CASE WHEN prev_count.cnt IS NULL THEN 0
-            WHEN ABS(current_count.cnt - prev_count.cnt) > prev_count.cnt * 0.2 THEN 1
-            ELSE 0 END
-FROM current_count, prev_count""",
+        row_growth_sql(t),
     ))
 
     # 4. uniqueness for columns whose names suggest it
@@ -156,9 +265,7 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_unique",
                 f"Check that {c['name']} values are unique",
-                f"SELECT COUNT(*) FROM (SELECT {c['name']}, COUNT(*) AS cnt FROM {t} "
-                f"WHERE {c['name']} IS NOT NULL GROUP BY {c['name']} "
-                f"HAVING COUNT(*) > 1) AS duplicates",
+                unique_sql(t, c["name"]),
             ))
 
     # 5. NULL checks for non-nullable columns
@@ -167,7 +274,7 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_not_null",
                 f"Ensure {c['name']} has no NULL values",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} IS NULL",
+                count_where_sql(t, is_null(c["name"])),
             ))
 
     # 6. no negatives in numeric columns (unless name allows)
@@ -176,7 +283,7 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_positive",
                 f"Ensure {c['name']} has no negative values",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} < 0",
+                count_where_sql(t, is_negative(c["name"])),
             ))
 
     # 7. no zeros in price-like columns
@@ -185,7 +292,7 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_not_zero",
                 f"Ensure {c['name']} has no zero values",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} = 0",
+                count_where_sql(t, is_zero(c["name"])),
             ))
 
     # 8. date sanity
@@ -196,20 +303,19 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_not_future",
                 f"Ensure {c['name']} contains no future dates",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} > CURRENT_DATE",
+                count_where_sql(t, is_future(c["name"])),
             ))
         rules.append(_rule(
             f"check_{c['name']}_reasonable_past",
             f"Ensure {c['name']} contains no unreasonably old dates",
-            f"SELECT COUNT(*) FROM {t} WHERE {c['name']} < '1970-01-01'",
+            count_where_sql(t, is_before_1970(c["name"])),
         ))
         if _matches(c["name"], END_DATE_PATTERNS):
             start_col = guess_start_date_column(c["name"], col_names)
             rules.append(_rule(
                 f"check_{c['name']}_end_date_order",
                 f"Ensure {c['name']} occurs after any start date (if applicable)",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} IS NOT NULL "
-                f"AND {start_col} IS NOT NULL AND {c['name']} < {start_col}",
+                count_where_sql(t, is_before(c["name"], start_col)),
             ))
 
     # 9. text formats. 9a (max length, default_validations.py:236-243):
@@ -224,35 +330,32 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_max_length",
                 f"Ensure {c['name']} does not exceed max length ({max_len})",
-                f"SELECT COUNT(*) FROM {t} WHERE LENGTH({c['name']}) > {max_len}",
+                count_where_sql(t, is_longer_than(c["name"], max_len)),
             ))
         if not c["nullable"]:
             rules.append(_rule(
                 f"check_{c['name']}_not_empty_string",
                 f"Ensure {c['name']} has no empty strings",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} = ''",
+                count_where_sql(t, is_empty_string(c["name"])),
             ))
         low = c["name"].lower()
         if "email" in low:
             rules.append(_rule(
                 f"check_{c['name']}_valid_email",
                 f"Ensure {c['name']} contains valid email format",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} IS NOT NULL "
-                f"AND {c['name']} NOT LIKE '%@%.%'",
+                count_where_sql(t, is_bad_email(c["name"])),
             ))
         if "phone" in low or "mobile" in low:
             rules.append(_rule(
                 f"check_{c['name']}_valid_phone",
                 f"Ensure {c['name']} contains valid phone number format",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} IS NOT NULL "
-                f"AND NOT ({c['name']} RLIKE '{PHONE_REGEX}')",
+                count_where_sql(t, is_bad_phone(c["name"])),
             ))
         if "zip" in low or "postal" in low:
             rules.append(_rule(
                 f"check_{c['name']}_valid_postal",
                 f"Ensure {c['name']} follows postal/zip code patterns",
-                f"SELECT COUNT(*) FROM {t} WHERE {c['name']} IS NOT NULL "
-                f"AND LENGTH(TRIM({c['name']})) < 3",
+                count_where_sql(t, is_bad_postal(c["name"])),
             ))
 
     # 10. 3σ outlier counts
@@ -261,13 +364,7 @@ FROM current_count, prev_count""",
             rules.append(_rule(
                 f"check_{c['name']}_outliers",
                 f"Check for extreme outliers in {c['name']} (> 3 std deviations)",
-                f"""WITH stats AS (
-    SELECT AVG({c['name']}) AS avg_val, STDDEV_SAMP({c['name']}) AS stddev_val
-    FROM {t} WHERE {c['name']} IS NOT NULL
-)
-SELECT COUNT(*) FROM {t}, stats
-WHERE {c['name']} > stats.avg_val + 3 * stats.stddev_val
-   OR {c['name']} < stats.avg_val - 3 * stats.stddev_val""",
+                outliers_sql(t, c["name"]),
                 "less_than", get_outlier_threshold(t),
             ))
 
@@ -276,7 +373,7 @@ WHERE {c['name']} > stats.avg_val + 3 * stats.stddev_val
         rules.append(_rule(
             f"check_{t}_ref_table_size",
             f"Ensure reference table {t} has a reasonable number of rows",
-            f"SELECT COUNT(*) FROM {t}",
+            count_rows_sql(t),
             "less_than", 1000,
         ))
 
@@ -288,8 +385,7 @@ WHERE {c['name']} > stats.avg_val + 3 * stats.stddev_val
             rules.append(_rule(
                 f"check_{c['name']}_null_rate",
                 f"Ensure {c['name']} null rate is below acceptable threshold",
-                f"SELECT (COUNT(*) FILTER (WHERE {c['name']} IS NULL) * 100.0 "
-                f"/ NULLIF(COUNT(*), 0)) FROM {t}",
+                null_rate_sql(t, c["name"]),
                 "less_than", 25.0,
             ))
 
@@ -299,12 +395,7 @@ WHERE {c['name']} > stats.avg_val + 3 * stats.stddev_val
             rules.append(_rule(
                 f"check_{c['name']}_distribution",
                 f"Ensure {c['name']} has a reasonable value distribution",
-                f"""WITH val_counts AS (
-    SELECT {c['name']}, COUNT(*) AS cnt,
-           (COUNT(*) * 100.0 / NULLIF((SELECT COUNT(*) FROM {t}), 0)) AS pct
-    FROM {t} WHERE {c['name']} IS NOT NULL GROUP BY {c['name']}
-)
-SELECT COUNT(*) FROM val_counts WHERE pct > 95.0""",
+                distribution_sql(t, c["name"]),
             ))
 
     # 14. FK distinct-cardinality (needs hints on parquet)
@@ -313,8 +404,7 @@ SELECT COUNT(*) FROM val_counts WHERE pct > 95.0""",
             rules.append(_rule(
                 f"check_{c['name']}_ref_distribution",
                 f"Ensure {c['name']} references a reasonable number of distinct values",
-                f"SELECT CASE WHEN (SELECT COUNT(DISTINCT {c['name']}) FROM {t} "
-                f"WHERE {c['name']} IS NOT NULL) = 1 THEN 1 ELSE 0 END",
+                ref_distribution_sql(t, c["name"]),
             ))
 
     # 15. updated-after-created timestamp ordering
@@ -326,8 +416,7 @@ SELECT COUNT(*) FROM val_counts WHERE pct > 95.0""",
             rules.append(_rule(
                 f"check_{u}_after_{cr}",
                 f"Ensure {u} is not before {cr}",
-                f"SELECT COUNT(*) FROM {t} WHERE {u} IS NOT NULL "
-                f"AND {cr} IS NOT NULL AND {u} < {cr}",
+                count_where_sql(t, is_before(u, cr)),
             ))
 
     return rules

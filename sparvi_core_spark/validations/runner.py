@@ -1,16 +1,22 @@
 """Validation runner: rule SQL through Catalyst + driver-side comparators.
 
-Port of ``sparvi/validations/validator.py:67-139``. Each rule's
-``query`` runs via ``spark.sql`` against registered temp views (full
-Catalyst support — joins, CTEs, scalar subqueries, FILTER clauses), the
-first column of the first row is compared driver-side.
+Port of ``sparvi/validations/validator.py:67-139``. A rule's ``query``
+runs via ``spark.sql`` against registered temp views (full Catalyst
+support — joins, CTEs, scalar subqueries, FILTER clauses), and the first
+column of the first row is compared driver-side.
 
 Differences from the reference, on purpose:
 - Result dicts carry **both** ``name`` and ``rule_name`` — the reference
   emits ``name`` (validator.py:116) but its own README (README.md:356),
   CLI (cli/validate.py:222) and tests (tests/test_validations.py:25)
   read ``rule_name``; emitting both serves every documented consumer.
-- Independent rules can run concurrently (``parallelism``): the Spark
+- Rules generated by ``get_default_validations`` are not run one query
+  each: ``validations.compiler`` answers a table's default rules in at
+  most two shared-scan queries (an aggregate and a grouping-sets
+  query). Values, types and result order equal the per-rule path; if a
+  fused query raises, its rules re-run one by one so each error lands
+  on its own rule. Every other rule runs as written.
+- Independent queries run concurrently (``parallelism``): the Spark
   scheduler interleaves the jobs — the analog of the reference's
   connection-per-rule (validator.py:91).
 """
@@ -18,11 +24,12 @@ Differences from the reference, on purpose:
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
 from sparvi_core_spark.config import get_config
+from sparvi_core_spark.validations.compiler import FusedQuery, compile_rules
 
 
 def _compare(operator: str, actual: Any, expected: Any) -> bool:
@@ -55,12 +62,11 @@ def _normalize_scalar(v: Any) -> Any:
     return v
 
 
-def _run_one(spark: SparkSession, rule: dict[str, Any]) -> dict[str, Any]:
+def _result(rule: dict[str, Any], fetch: Callable[[], Any]) -> dict[str, Any]:
     name = rule.get("name", "<unnamed>")
     base = {"name": name, "rule_name": name, "description": rule.get("description", "")}
     try:
-        row = spark.sql(rule["query"]).first()
-        actual_value = _normalize_scalar(row[0]) if row is not None else None
+        actual_value = _normalize_scalar(fetch())
         is_valid = _compare(rule.get("operator", "equals"), actual_value,
                             rule.get("expected_value", 0))
         return {
@@ -73,6 +79,14 @@ def _run_one(spark: SparkSession, rule: dict[str, Any]) -> dict[str, Any]:
         return {**base, "is_valid": False, "error": str(e)}
 
 
+def _run_one(spark: SparkSession, rule: dict[str, Any]) -> dict[str, Any]:
+    def fetch():
+        row = spark.sql(rule["query"]).first()
+        return row[0] if row is not None else None
+
+    return _result(rule, fetch)
+
+
 def run_validations(
     spark: SparkSession,
     validation_rules: list[dict[str, Any]],
@@ -81,7 +95,34 @@ def run_validations(
     cfg = get_config(config)["validation"]
     rules = validation_rules[: cfg["max_rules"]]
     parallelism = max(1, int(cfg["parallelism"]))
-    if parallelism == 1 or len(rules) <= 1:
-        return [_run_one(spark, r) for r in rules]
-    with ThreadPoolExecutor(max_workers=parallelism) as ex:
-        return list(ex.map(lambda r: _run_one(spark, r), rules))
+
+    def pmap(fn, items):
+        if parallelism == 1 or len(items) <= 1:
+            return [fn(x) for x in items]
+        with ThreadPoolExecutor(max_workers=parallelism) as ex:
+            return list(ex.map(fn, items))
+
+    def run(task: FusedQuery | int):
+        if isinstance(task, int):
+            return _run_one(spark, rules[task])
+        try:
+            return spark.sql(task.sql).first()
+        except Exception:  # its rules re-run one by one below
+            return None
+
+    fused, single = compile_rules(rules)
+    results: list[Any] = [None] * len(rules)
+    retry: list[int] = []
+    tasks: list[FusedQuery | int] = [*fused, *single]
+    for task, out in zip(tasks, pmap(run, tasks)):
+        if isinstance(task, int):
+            results[task] = out
+        elif out is None:
+            retry += task.rule_ix
+        else:
+            for i, v in zip(task.rule_ix, out):
+                results[i] = _result(rules[i], lambda v=v: v)
+    # a failed fused query: each error lands on its own rule
+    for i, res in zip(retry, pmap(lambda i: _run_one(spark, rules[i]), retry)):
+        results[i] = res
+    return results

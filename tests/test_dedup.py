@@ -142,6 +142,23 @@ def test_dedup_clusters_float_ids_exact_propagation(spark):
     assert got == {2.5: 2.125, 2.4: 2.125, 2.25: 2.125, 2.125: 2.125}
 
 
+
+def test_dedup_clusters_fractional_decimal_ids(spark):
+    """Fractional decimal ids take the xxhash64 digest, not the rounding
+    decimal(38,0) sum: on this chain a round whose only label change is
+    9.4 → 8.6 keeps the rounded sum (both round to 9) and used to stop
+    early with the component split."""
+    from sparvi_core_spark.operators.dedup import dedup_clusters
+
+    chain = ["8.6", "20", "21", "9.4", "22", "23"]
+    pairs = spark.sql(
+        "SELECT CAST(a AS DECIMAL(3,1)) AS id_a, CAST(b AS DECIMAL(3,1)) AS id_b "
+        "FROM VALUES " + ", ".join(f"('{a}', '{b}')" for a, b in zip(chain, chain[1:]))
+        + " AS t(a, b)"
+    )
+    clusters = {r["cluster"] for r in dedup_clusters(pairs).collect()}
+    assert len(clusters) == 1 and str(clusters.pop()) == "8.6"
+
 def test_dedup_clusters_nonconvergence_is_never_silent(spark):
     """A chain longer than max_iter cannot converge (labels move one hop
     per round) — must raise by default, warn when asked, and converge

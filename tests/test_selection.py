@@ -433,3 +433,31 @@ def test_filter_sweep_fuzz_monotone(spark):
     for r in out:
         assert 0.0 <= r["doc_frac"] <= 1.0
         assert 0.0 <= r["weight_frac"] <= 1.0
+
+
+def test_dsir_weight_table_memoized_logs_bit_identical(spark):
+    """Memoizing the JVM logs by input value changes no bit of the
+    weight table: compared against two uncached ``Math.log`` calls per
+    bucket, with repeated counts, NULL counts and unseen buckets."""
+    import numpy as np
+
+    from sparvi_core_spark.operators.selection import _dsir_weight_table
+
+    rows = [
+        {"feature": b, "n_target": None if b % 7 == 0 else b % 4,
+         "n_raw": None if b % 5 == 0 else (b * 3) % 6}
+        for b in range(0, 64, 2)
+    ]
+    alpha, const, buckets = 0.5, -0.25, 70
+    got = _dsir_weight_table(spark, rows, alpha, const, buckets)
+
+    jlog = spark._jvm.java.lang.Math.log
+    log_a = float(jlog(0.0 + alpha))
+    want = np.full(buckets, (log_a - log_a) + const, dtype=np.float64)
+    for r in rows:
+        want[r["feature"]] = (
+            float(jlog(float(r["n_target"] or 0) + alpha))
+            - float(jlog(float(r["n_raw"] or 0) + alpha))
+        ) + const
+    assert got.dtype == want.dtype
+    assert got.tobytes() == want.tobytes()
