@@ -7,26 +7,31 @@ date_stats, frequent_values, outliers, [samples], anomalies,
 schema_shifts, trends``).
 
 Physical plan (vs the reference's ~dozens of warehouse round-trips):
+one job per aggregate family, each over the input as it was read.
 
-1. **J1** one wide ``df.agg(...)``: row count + per-column nulls +
-   distincts + numeric/text/date stat families — single column-pruned
-   scan, whole-stage codegen.
+1. **J1** the aggregate families, one ``df.agg`` each:
+   - streaming aggregates: row count + per-column nulls + numeric/text/
+     date stat families (+ HLL distincts in approx mode) — one
+     column-pruned scan, whole-stage codegen;
+   - exact distincts: one job, a single Expand;
+   - quartiles of every numeric column: one job (exact ``percentile``
+     or ``percentile_approx``).
 2. **J2** duplicate-group count: ``groupBy(*all).count().filter(>1)`` —
    hash aggregate with map-side partials (counts *groups*, matching
    profile_engine.py:100-116).
 3. **J3** frequent values, all columns in ONE pass: ``stack`` the
-   columns into (col, value) pairs → groupBy → per-column top-1 via
-   window (vs the reference's one query per column,
-   profile_engine.py:290-335). Guarded by the reference's 1M-row
-   threshold.
+   columns into (col, value) pairs → groupBy → per-column top-1
+   (vs the reference's one query per column, profile_engine.py:290-335).
+   Guarded by the reference's 1M-row threshold.
 4. **J4** outliers, all numeric columns in one pass: stack + per-column
    3σ bounds broadcast as a map literal (the reference's 1-row CTE cross
    join, profile_engine.py:337-385, becomes two scalar literals).
-5. **J5** ``limit(10)`` samples.
+5. **J5** ``limit(10)`` samples — the table's first rows.
 
-All jobs are submitted concurrently and re-scan with column pruning —
-no materialization barrier (J2 is also gated — a full-width groupBy of
-a wide fact table is an opt-in, not a default).
+The J1 jobs and J2 are submitted at once; J3-J5 follow the streaming
+agg, whose row count and avg/stdev they need. No materialization
+barrier and no repartition: the concurrent jobs are the parallelism.
+Measurements behind these choices: SCALE.md "Profiling engine".
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from sparvi_core_spark.coltypes import bucket_columns
 from sparvi_core_spark.config import get_config
+from sparvi_core_spark.errors import error_message
 from sparvi_core_spark.profiler import metrics as M
 from sparvi_core_spark.profiler.compare import (
     detect_anomalies,
@@ -165,30 +171,14 @@ def profile_table(
             if "duplicate_check_mode" not in explicit:
                 p["duplicate_check_mode"] = "hash"
 
-    # Parallelism floor: a compact table (one file, few row groups)
-    # would run every profile job at 1-3 task parallelism. All
-    # downstream jobs are value-deterministic under repartitioning
-    # (min_by/row_number tie-breaks are by value; sketches are
-    # order-insensitive; the display sample's partition-order bias is
-    # already documented), so the whole profile shares the fanned
-    # frame. Measured sf0.1 lineitem (in-plan exchange included,
-    # same-session A/B): 7.7 s → 5.2 s. No-op at scale.
-    from sparvi_core_spark.plans.fanout import fan_out_compact
-
-    df = fan_out_compact(df)
-
-    # --- J1: wide aggregation(s) ---------------------------------------
-    # Plan-shape rules (each measured at sf0.1, see SCALE.md):
-    # * exact count_distinct plans an Expand; exact/approx percentile is
-    #   an object-hash aggregate. Fusing either with the streaming-agg
-    #   family knocks the whole agg out of whole-stage codegen (worst
-    #   case, Expand x object-agg, is ~15x).
-    # * so: streaming aggregates fuse into ONE job; percentiles are a
-    #   second job; exact distincts a third — all submitted
-    #   concurrently (the scheduler interleaves; each is one
-    #   column-pruned scan). Approx distinct (HLL) is a streaming agg
-    #   and joins job 1, making approx mode a two-job single-scan-ish
-    #   pass — the 100 TB default.
+    # --- J1: aggregate families, one job each -------------------------
+    # Exact count_distinct plans an Expand and percentile is an
+    # object-hash aggregate; fused with the streaming aggregates either
+    # knocks the whole agg out of whole-stage codegen, so each family is
+    # its own concurrent job: all exact distincts in one (a single
+    # Expand, its N× rows bounded by the exact-mode size gate), the
+    # quartiles of every numeric column in another. Approx distinct
+    # (HLL) is a streaming agg and joins the first job.
     nd_exprs = [F.count(F.lit(1)).alias("row_count")]
     nd_exprs += M.null_count_exprs(b.all)
     nd_exprs += M.numeric_stats_exprs(b.numeric)
@@ -206,61 +196,22 @@ def profile_table(
     if p["approx_distinct"]:
         nd_exprs += d_exprs
         d_exprs = []
-    extra_jobs: list[list] = []
-    if d_exprs:
-        # EXACT distincts: ONE fused job (single Expand) next to the
-        # other concurrent jobs. An earlier cut of this round split it
-        # into one job per column, which wins when the distinct phase
-        # runs ALONE (no Expand, overlapped final merges: 2.29 s fused
-        # → 0.70 s split, phase-isolated) — but in the full concurrent
-        # shape below the machine is already saturated by the other
-        # jobs and N extra jobs just add ~0.25 s/job of driver
-        # planning/codegen, which dominates the small-table exact path
-        # (measured: whole heavy phase 7.2 s with per-column splits vs
-        # 2.2 s fused, sf0.1 lineitem steady-state). The Expand's N×
-        # row multiplication is bounded by the exact-mode size gate.
-        extra_jobs.append(d_exprs)
-    if pct_exprs:
-        if p["approx_percentiles"]:
-            # approx sketches are bounded-memory and mergeable — ONE
-            # pass over all columns is the right shape at scale
-            extra_jobs.append(pct_exprs)
-        else:
-            # EXACT percentiles stay one job PER COLUMN: each is an
-            # object-hash aggregate whose final merge is a single task,
-            # so fusing them serializes N merges into one straggler
-            # task that becomes the critical path of the whole profile
-            # (measured: 2.9 s fused vs 2.2 s split, sf0.1 lineitem,
-            # concurrent shape). Unlike the distinct case the split
-            # costs only len(numeric) extra jobs.
-            extra_jobs.extend([e] for e in pct_exprs)
-    # Scheduling (guide §2.6 — overlap independent jobs): submit ALL
-    # heavy jobs at t0 — the streaming agg, the fused distinct job, the
-    # per-column percentile jobs, and the duplicate-group job share no
-    # state, so nothing serializes them. The streaming agg's result
-    # gates only the cheap tail (frequent values / outliers / samples
-    # need row_count or avg/stdev), submitted the moment it lands.
-    # There is no persist/materialization barrier any more: every job
-    # re-scans with column pruning, which measured faster than the
-    # persist at every size where exact mode applies (the persist pass
-    # itself cost 2.8 s at sf0.1 and serialized everything behind it),
-    # and at 100 TB (approx mode, row_count ≫ any cache threshold) a
-    # persist was never taken anyway. Error semantics unchanged: a
-    # failed streaming agg still raises out of profile_table; the
-    # distinct/percentile jobs ride _safe-style degradation only where
-    # they always did (they fill `wide`, whose failures raise on
-    # drain, exactly as before); J2-J5 still degrade into errors[].
-    # Measured sf0.1 same-session A/B (bench settings, steady state):
-    # profile_lineitem 7.7 → ~4 s, profile_orders 3.1 → ~1 s.
-    pool = ThreadPoolExecutor(max_workers=min(16, 5 + len(extra_jobs)))
+    extra_jobs = [e for e in (d_exprs, pct_exprs) if e]
+    # Scheduling: the streaming agg, the distinct and quartile jobs and
+    # the duplicate-group job share no state, so all start at t0. The
+    # streaming agg gates only the cheap tail (frequent values /
+    # outliers / samples need row_count or avg/stdev), submitted the
+    # moment it lands. A failed streaming, distinct or quartile job
+    # raises out of profile_table; J2-J5 degrade into errors[].
+    pool = ThreadPoolExecutor(max_workers=5 + len(extra_jobs))
     wide = {}
     f_nd = pool.submit(lambda: df.agg(*nd_exprs).first().asDict())
     j1_futures = [
         pool.submit(lambda e=e: df.agg(*e).first().asDict())
         for e in extra_jobs
     ]
-    # extra_jobs lists the fused distinct job first (exact mode) — J3
-    # waits on exactly it, not on the percentile jobs behind it
+    # extra_jobs lists the exact distinct job first — J3 waits on
+    # exactly it, not on the quartile job behind it
     d_futures = j1_futures[:1] if d_exprs else []
 
     try:
@@ -457,15 +408,16 @@ def profile_table(
 
         def j5_samples() -> list:
             # S6 — display sample. "limit" is the reference's plain
-            # LIMIT; "random" is the TABLESAMPLE path: df.sample with an
-            # oversampled fraction (sample() cannot guarantee exact
-            # counts) then limit. Scans stop early either way — no full
-            # pass at 100 TB. Known bias, accepted for early-stop: the
-            # limit takes the FIRST n sampled rows in partition order,
-            # skewing the display sample toward early partitions; a
-            # uniform n-row draw would need orderBy(rand(seed)) on the
-            # sampled frame, forcing a full sample materialization —
-            # the wrong trade for a 10-row display sample at 100 TB.
+            # LIMIT: the table's first rows; "random" is the TABLESAMPLE
+            # path: df.sample with an oversampled fraction (sample()
+            # cannot guarantee exact counts) then limit. Scans stop
+            # early either way — no full pass at 100 TB. Known bias,
+            # accepted for early-stop: the limit takes the FIRST n
+            # sampled rows in partition order, skewing the display
+            # sample toward early partitions; a uniform n-row draw
+            # would need orderBy(rand(seed)) on the sampled frame,
+            # forcing a full sample materialization — the wrong trade
+            # for a 10-row display sample at 100 TB.
             if not include_samples:
                 return []
             n = p["sample_row_limit"]
@@ -488,7 +440,7 @@ def profile_table(
             try:
                 return fut.result()
             except Exception as ex:  # noqa: BLE001 — degrade, don't die
-                errors[name] = f"{type(ex).__name__}: {ex}"
+                errors[name] = f"{type(ex).__name__}: {error_message(ex)}"
                 return default
 
         # J2 needs nothing from the streaming agg — it runs from t0

@@ -2001,20 +2001,22 @@ def _centroids_frame(
 def _centroid_rows(
     spark: SparkSession, path: str, manifest: dict, cents: DataFrame
 ) -> tuple:
-    """Collected centroid rows + schema, memoized per (session,
-    snapshot) under the same immutability argument as
-    :func:`_centroids_frame`. The table is the index's model
+    """Collected centroid rows + a local-relation frame over them,
+    memoized per (session, snapshot) under the same immutability
+    argument as :func:`_centroids_frame`. The table is the index's model
     parameters — k × dim doubles, bounded by the centroid contract —
     and collecting it once per snapshot removes one driver job from
     EVERY search call (the serving path's steady-state cost, guide §7
-    driver-side work)."""
+    driver-side work); building the frame once removes the per-call
+    Python→JVM conversion of every row."""
     memo = _session_memo(spark)
     key = (path, "__centroid_rows__", _snapshot_identity(manifest, "vectors"))
     hit = memo.get(key)
     if hit is not None:
         return hit
     sel = cents.select("bucket", "centroid")
-    out = (sel.collect(), sel.schema)
+    rows = sel.collect()
+    out = (rows, spark.createDataFrame(rows, schema=sel.schema))
     _memo_put(memo, key, out)
     return out
 
@@ -2055,17 +2057,16 @@ def search_ivf_index(
     # literal strategy's centroid collect, and the probe collect —
     # plus a per-call DataSource resolution of the centroid dir. The
     # centroid table is the index's immutable model parameters, so its
-    # rows are collected once per (session, snapshot) and rebuilt as a
-    # LOCAL relation per call (collect over LocalTableScan launches no
-    # job), and the strategy is picked from the collected count —
+    # rows are collected once per (session, snapshot) into a LOCAL
+    # relation (collect over LocalTableScan launches no job), and the
+    # strategy is picked from the collected count —
     # leaving ONE driver job per search ahead of the main scan.
-    cent_rows, cent_schema = _centroid_rows(spark, path, manifest, cents)
+    cent_rows, cents_local = _centroid_rows(spark, path, manifest, cents)
     if nprobe > len(cent_rows):
         raise ValueError(
             f"nprobe={nprobe} exceeds the number of centroids "
             f"({len(cent_rows)})"
         )
-    cents_local = spark.createDataFrame(cent_rows, schema=cent_schema)
     strategy = (
         "literal" if len(cent_rows) <= LITERAL_CENTROID_MAX else "join"
     )

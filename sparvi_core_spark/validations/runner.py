@@ -16,6 +16,9 @@ Differences from the reference, on purpose:
   query). Values, types and result order equal the per-rule path; if a
   fused query raises, its rules re-run one by one so each error lands
   on its own rule. Every other rule runs as written.
+- A failing rule's ``error`` is the exception's message without the
+  analyzed plan Spark appends to analysis errors (``errors.error_message``),
+  so the same failure gives the same string on every run.
 - Independent queries run concurrently (``parallelism``): the Spark
   scheduler interleaves the jobs — the analog of the reference's
   connection-per-rule (validator.py:91).
@@ -29,6 +32,7 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 from sparvi_core_spark.config import get_config
+from sparvi_core_spark.errors import error_message
 from sparvi_core_spark.validations.compiler import FusedQuery, compile_rules
 
 
@@ -76,7 +80,7 @@ def _result(rule: dict[str, Any], fetch: Callable[[], Any]) -> dict[str, Any]:
             "expected_value": rule.get("expected_value", 0),
         }
     except Exception as e:  # per-rule isolation (validator.py:122-128)
-        return {**base, "is_valid": False, "error": str(e)}
+        return {**base, "is_valid": False, "error": error_message(e)}
 
 
 def _run_one(spark: SparkSession, rule: dict[str, Any]) -> dict[str, Any]:

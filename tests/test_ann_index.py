@@ -62,8 +62,20 @@ def test_write_read_roundtrip_and_manifest(spark, tmp_path):
     assert a == b
 
 
-def test_search_equals_in_memory_ivf(spark, tmp_path):
+def test_search_equals_in_memory_ivf(spark, tmp_path, monkeypatch):
+    from sparvi_core_spark.operators import similarity
     from sparvi_core_spark.operators.similarity import cosine_topk_ivf
+    from sparvi_core_spark.sources.ann_index import append_ivf_index
+
+    # the centroid frame each search probes against, in call order
+    frames = []
+    real_assign = similarity.ivf_assign_probes
+
+    def spy(queries, centroids, *args, **kwargs):
+        frames.append(centroids)
+        return real_assign(queries, centroids, *args, **kwargs)
+
+    monkeypatch.setattr(similarity, "ivf_assign_probes", spy)
 
     df = _corpus(spark)
     cents = _centroids(spark, df)
@@ -77,6 +89,19 @@ def test_search_equals_in_memory_ivf(spark, tmp_path):
     g = sorted(map(tuple, got.collect()), key=lambda t: (t[0], t[3]))
     w = sorted(map(tuple, want.collect()), key=lambda t: (t[0], t[3]))
     assert g == w and len(g) > 0
+
+    # the centroid frame is built once per snapshot: a second search
+    # reuses it, a search after an append (a new snapshot) does not
+    first = frames[0]
+    frames.clear()
+    search_ivf_index(spark, path, queries, k=5, nprobe=2)
+    append_ivf_index(
+        _corpus(spark, n=5, seed=12).withColumn("vec_id", F.col("vec_id") + 1000),
+        path,
+    )
+    search_ivf_index(spark, path, queries, k=5, nprobe=2)
+    assert len(frames) == 2
+    assert frames[0] is first and frames[1] is not first
 
 
 def _walk_leaves(node, out):

@@ -295,3 +295,60 @@ def test_unknown_sample_method_rejected(spark, views):
             spark, "region",
             config={"profiling": {"sample_method": "reservoir"}},
         )
+
+
+def test_default_sample_is_table_head(spark, views):
+    """The default "limit" sample is the reference's plain LIMIT: the
+    table's first rows, in file order."""
+    p = profile_table(spark, "orders")
+    head = [r.asDict() for r in spark.table("orders").limit(10).collect()]
+    assert p["samples"] == head
+
+
+def test_job_ceiling_one_table(spark, views):
+    """One job per aggregate family: the streaming agg, the exact
+    distincts and ONE quartile job for all numeric columns, then the
+    duplicate, frequent-value, outlier and sample jobs. Counted with AQE
+    off, the test session's setting (AQE runs each shuffle stage as its
+    own job), pinned here because CLI tests rebuild the shared session
+    with production defaults."""
+    aqe = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        p = profile_table(spark, "lineitem")
+        jobs = set(tracker.getJobIdsForGroup(None)) - before
+    finally:
+        spark.conf.set(aqe, old)
+    assert len(p["numeric_stats"]) > 4
+    assert "errors" not in p
+    assert len(jobs) <= 8, f"{len(jobs)} jobs"
+
+
+def test_fused_quartiles_equal_per_column_percentile(spark):
+    """The one quartile job gives each column what its own
+    ``percentile`` gives — across integer, double and decimal columns,
+    an all-NULL column, and an empty table."""
+    import decimal
+
+    import pyspark.sql.types as T
+    from pyspark.sql import functions as F
+
+    schema = T.StructType([
+        T.StructField("i", T.IntegerType(), True),
+        T.StructField("d", T.DoubleType(), True),
+        T.StructField("m", T.DecimalType(10, 2), True),
+        T.StructField("n", T.DoubleType(), True),
+        T.StructField("s", T.StringType(), True),
+    ])
+    rows = [(k % 7 if k % 5 else None, k * 1.25 - 9, decimal.Decimal(k * 37 % 101) / 4,
+             None, f"s{k}") for k in range(37)]
+    full = spark.createDataFrame(rows, schema)
+    for df in (full, full.limit(0)):
+        p = profile_table(spark, "quartiles_t", df=df, include_samples=False)
+        assert set(p["numeric_stats"]) == {"i", "d", "m", "n"}
+        for c, s in p["numeric_stats"].items():
+            q = df.agg(F.percentile(c, F.lit([0.25, 0.5, 0.75]))).first()[0]
+            assert [s["q1"], s["median"], s["q3"]] == (q or [None] * 3), c

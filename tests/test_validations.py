@@ -161,3 +161,16 @@ def test_length_hint_rules(spark, products):
         "check_category_max_length"]["query"].replace("> 11", "> 8"))
     r2 = run_validations(spark, [tight])
     assert not r2[0]["is_valid"] and r2[0]["actual_value"] > 0
+
+
+def test_failing_rule_error_is_stable(spark, views):
+    """A rule that fails analysis stores the same ``error`` on every
+    run: the message (error class, text, SQLSTATE, position) without the
+    analyzed plan, whose expression ids change from run to run."""
+    rule = {"name": "missing_col", "operator": "equals", "expected_value": 0,
+            "query": "SELECT COUNT(*) FROM (SELECT nope, COUNT(*) cnt "
+                     "FROM orders GROUP BY nope HAVING cnt > 1)"}
+    first, second = (run_validations(spark, [rule])[0]["error"] for _ in range(2))
+    assert first == second
+    assert first.startswith("[UNRESOLVED_COLUMN")
+    assert "SQLSTATE: 42703" in first and "\n" not in first
