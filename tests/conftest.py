@@ -28,6 +28,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _restore_session_conf(spark):
+    """Give every module the suite's session settings. The CLI builds
+    its session with production defaults (AQE on), and ``getOrCreate``
+    applies them to the shared session, so a module that drives the CLI
+    would otherwise change them for every module after it."""
+    before = spark.conf.getAll
+    yield
+    for key, value in spark.conf.getAll.items():
+        if before.get(key) == value or not spark.conf.isModifiable(key):
+            continue
+        if key in before:
+            spark.conf.set(key, before[key])
+        else:
+            spark.conf.unset(key)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

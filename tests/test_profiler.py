@@ -310,18 +310,12 @@ def test_job_ceiling_one_table(spark, views):
     distincts and ONE quartile job for all numeric columns, then the
     duplicate, frequent-value, outlier and sample jobs. Counted with AQE
     off, the test session's setting (AQE runs each shuffle stage as its
-    own job), pinned here because CLI tests rebuild the shared session
-    with production defaults."""
-    aqe = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(aqe)
-    spark.conf.set(aqe, "false")
-    try:
-        tracker = spark.sparkContext.statusTracker()
-        before = set(tracker.getJobIdsForGroup(None))
-        p = profile_table(spark, "lineitem")
-        jobs = set(tracker.getJobIdsForGroup(None)) - before
-    finally:
-        spark.conf.set(aqe, old)
+    own job)."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    p = profile_table(spark, "lineitem")
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
     assert len(p["numeric_stats"]) > 4
     assert "errors" not in p
     assert len(jobs) <= 8, f"{len(jobs)} jobs"
